@@ -157,14 +157,14 @@ def wasde(
     if isinstance(cells, (bytes, bytearray)):
         from pyspark.sql import SparkSession
 
+        from gpi_etl_spark.sources.xls import is_xls, xls_cells_df
+
         sp = spark or SparkSession.getActiveSession()
         if sp is None:
             raise ValueError("pass spark= when supplying raw workbook bytes")
         payload = bytes(cells)
-        if payload[:8] == b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1":
+        if is_xls(payload):
             # legacy BIFF8 — the reference's actual WASDE payload format
-            from gpi_etl_spark.sources.xls import xls_cells_df
-
             cells = xls_cells_df(sp, payload, sheet)
         else:
             from gpi_etl_spark.sources.xlsx import xlsx_cells_df

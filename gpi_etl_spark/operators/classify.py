@@ -12,7 +12,7 @@ expression — no UDF, no shuffle, linear scan at any scale.
 Rules are data: ``Rule(pattern, category, field)``. The reference's
 shipped rule list includes two latent bugs (rules written against
 ``poi_type`` but looped over ``poi_name`` values, HTIPPLSITE/__init__
-.py:181,234,239); ``plans.sites.default_rules(compat=True)`` reproduces
+.py:181,234,239); ``plans.sites.full_rules(compat=True)`` reproduces
 them, the default list fixes them.
 """
 

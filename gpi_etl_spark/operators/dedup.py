@@ -19,13 +19,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from gpi_etl_spark import pins
 from gpi_etl_spark.functions.rounding import fs6
 
-
-#: at most one shingle-frame cache stays pinned per process (shared by
-#: ngram_jaccard_pairs and jaccard_pairs_prefix_filtered — the next
-#: call of either evicts; unpersist never breaks lazy plans)
-_LIVE_SHINGLE_CACHES: list[DataFrame] = []
+#: pin owners: at most one shingle frame (shared by ngram_jaccard_pairs
+#: and jaccard_pairs_prefix_filtered — the next call of either evicts)
+#: and one LSH signature table stay pinned per process
+_SHINGLES = "dedup.shingles"
+_SIGNATURES = "dedup.signatures"
 
 
 def normalize_text(col: Column | str) -> Column:
@@ -126,10 +127,8 @@ def ngram_jaccard_pairs(
     shingle), which is why the scale path is :func:`minhash_lsh_pairs`;
     this exact form is the oracle.
     """
-    while _LIVE_SHINGLE_CACHES:
-        _LIVE_SHINGLE_CACHES.pop().unpersist()
-    sh = word_shingles(df, text_col, id_col, n).cache()
-    _LIVE_SHINGLE_CACHES.append(sh)
+    pins.release(_SHINGLES)
+    sh = pins.pin(word_shingles(df, text_col, id_col, n), _SHINGLES)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles"))
     a = sh.select(F.col(id_col).alias("id_a"), "shingle")
     b = sh.select(F.col(id_col).alias("id_b"), "shingle")
@@ -202,12 +201,6 @@ def minhash_signatures(
     )
 
 
-#: at most one LSH signature cache stays pinned per process (see
-#: minhash_lsh_pairs); callers running two LSH jobs truly concurrently
-#: should pass persist_signatures=False on one of them.
-_LIVE_SIG_CACHES: list[DataFrame] = []
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -216,7 +209,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 64,
     bands: int = 16,
     threshold: float | None = None,
-    persist_signatures: bool = True,
     hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Near-dup candidate pairs via banded MinHash LSH.
@@ -230,25 +222,18 @@ def minhash_lsh_pairs(
     subset.
 
     The signature table feeds three consumers (banding + both sides of
-    the pair attach), so by default it is persisted MEMORY_AND_DISK
-    rather than recomputed per consumer — signatures cost
-    ``num_hashes × 8`` bytes/doc (≈0.5 TB per billion docs at 64
-    hashes: cluster-cacheable, spills gracefully). Pass
-    ``persist_signatures=False`` to trade two extra corpus passes for
-    zero cache footprint.
+    the pair attach), so it is pinned rather than recomputed per
+    consumer — signatures cost ``num_hashes × 8`` bytes/doc (≈0.5 TB
+    per billion docs at 64 hashes: cluster-cacheable, spills
+    gracefully). The previous call's signature pin is dropped first,
+    bounding cache growth across repeated calls in one session.
     """
     rows_per_band = num_hashes // bands
-    sig = minhash_signatures(df, text_col, id_col, n, num_hashes, hash_mode)
-    if persist_signatures:
-        from pyspark.storagelevel import StorageLevel
-
-        # Bound cache growth across repeated calls in one session:
-        # drop the previous call's signature cache before pinning this
-        # one (unpersist never breaks lazy plans — they just recompute).
-        while _LIVE_SIG_CACHES:
-            _LIVE_SIG_CACHES.pop().unpersist()
-        sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
-        _LIVE_SIG_CACHES.append(sig)
+    pins.release(_SIGNATURES)
+    sig = pins.pin(
+        minhash_signatures(df, text_col, id_col, n, num_hashes, hash_mode),
+        _SIGNATURES,
+    )
     band_idx = F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band")
     # hash the signature slice (array<long>) directly — no per-band
     # string materialization; poly mode folds the slice with the same
@@ -618,13 +603,11 @@ def jaccard_pairs_prefix_filtered(
     # the shingle frame feeds three consumers (prefix ranking, the
     # global-frequency agg inside it, and the full-set verification),
     # so it is pinned for the run — bounded by the same single-live-
-    # cache policy as the signature cache above (repeated calls in one
+    # pin policy as the signature table (repeated calls in one
     # session — bench's cold+warm lanes, the prefix probe — would
     # otherwise accumulate pinned copies)
-    while _LIVE_SHINGLE_CACHES:
-        _LIVE_SHINGLE_CACHES.pop().unpersist()
-    sh = sh.persist()
-    _LIVE_SHINGLE_CACHES.append(sh)
+    pins.release(_SHINGLES)
+    sh = pins.pin(sh, _SHINGLES)
     ranked = prefix_shingles(sh, id_col, threshold)
     a = ranked.select(F.col(id_col).alias("id_a"), "shingle")
     b = ranked.select(F.col(id_col).alias("id_b"), "shingle")

@@ -28,9 +28,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: at most one heavy-hitters item cache stays pinned per process (same
-#: policy as similarity._LIVE_KMEANS_CACHES)
-_LIVE_HH_CACHES: list[DataFrame] = []
+from gpi_etl_spark import pins
+
+#: pin owner: at most one heavy-hitters op's caches stay pinned per
+#: process (the next call evicts)
+_OWNER = "heavyhitters"
 
 
 def _mg_update(counters: dict, v, w: int, k: int) -> None:
@@ -112,13 +114,8 @@ def heavy_hitters(
     scan. The cache materializes on the ``count()`` action; at most
     one stays pinned per process (next call evicts).
     """
-    from pyspark.storagelevel import StorageLevel
-
-    items = items.select(item_col)
-    while _LIVE_HH_CACHES:
-        _LIVE_HH_CACHES.pop().unpersist()
-    items = items.persist(StorageLevel.MEMORY_AND_DISK)
-    _LIVE_HH_CACHES.append(items)
+    pins.release(_OWNER)
+    items = pins.pin(items.select(item_col), _OWNER)
     total = items.count()
     if total == 0:
         return items.withColumn(
@@ -181,14 +178,11 @@ def superspreaders(
     final join — unpinned, the upstream join + dedup shuffle executed
     twice and the sort-limit twice (measured 2x at sf0.1). At most one
     heavy-hitters op's caches stay pinned per process."""
-    from pyspark.storagelevel import StorageLevel
-
     from gpi_etl_spark.operators.sketches import kmv_build, kmv_estimate
     from gpi_etl_spark.functions.rounding import fs6
 
-    while _LIVE_HH_CACHES:
-        _LIVE_HH_CACHES.pop().unpersist()
-    pairs = (
+    pins.release(_OWNER)
+    pairs = pins.pin(
         df.filter(
             F.col(key_col).isNotNull() & F.col(partner_col).isNotNull()
         )
@@ -196,18 +190,15 @@ def superspreaders(
             F.col(key_col).alias("_sk"),
             F.col(partner_col).cast("string").alias("_sp"),
         )
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .distinct(),
+        _OWNER,
     )
-    _LIVE_HH_CACHES.append(pairs)
     regs = kmv_build(pairs, "_sp", ("_sk",), k=k, hash_mode=hash_mode)
     est = kmv_estimate(regs, ("_sk",))
-    cands = (
-        est.orderBy(F.col("est").desc(), F.col("_sk").asc())
-        .limit(top_n)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    cands = pins.pin(
+        est.orderBy(F.col("est").desc(), F.col("_sk").asc()).limit(top_n),
+        _OWNER,
     )
-    _LIVE_HH_CACHES.append(cands)
     exact = (
         pairs.join(
             F.broadcast(cands.select("_sk")), "_sk", "left_semi"

@@ -25,9 +25,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-#: at most one pagerank edge cache stays pinned per process (same
-#: policy as similarity._LIVE_KMEANS_CACHES)
-_LIVE_PR_CACHES: list[DataFrame] = []
+from gpi_etl_spark import pins
+
+#: pin owner: at most one pagerank/HITS run's caches stay pinned per
+#: process (the next call of either evicts)
+_OWNER = "linkgraph"
 
 
 def pagerank(
@@ -57,8 +59,6 @@ def pagerank(
 
     Returns a DataFrame ``(node, rank)`` with one row per node.
     """
-    from pyspark.storagelevel import StorageLevel
-
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     )
@@ -74,14 +74,11 @@ def pagerank(
     ew = e.join(outdeg, "src").select(
         "src", "dst", (F.lit(1.0) / F.col("_outdeg")).alias("w")
     )
-    while _LIVE_PR_CACHES:
-        _LIVE_PR_CACHES.pop().unpersist()
-    ew = ew.repartition("src").persist(StorageLevel.MEMORY_AND_DISK)
-    _LIVE_PR_CACHES.append(ew)
+    pins.release(_OWNER)
+    ew = pins.pin(ew.repartition("src"), _OWNER)
     # nodes are re-scanned every iteration (left side of the rank
     # update) and for the dangling mass — pin them too
-    nodes = nodes.persist(StorageLevel.MEMORY_AND_DISK)
-    _LIVE_PR_CACHES.append(nodes)
+    nodes = pins.pin(nodes, _OWNER)
 
     n = nodes.count()
     if n == 0:
@@ -89,10 +86,10 @@ def pagerank(
     # one up-front action decides whether the per-iteration dangling
     # scan is needed at all: a link graph where every page has
     # out-links (common after edge harvesting) pays zero extra jobs
-    dangling = nodes.join(
-        outdeg, nodes["node"] == outdeg["src"], "left_anti"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _LIVE_PR_CACHES.append(dangling)
+    dangling = pins.pin(
+        nodes.join(outdeg, nodes["node"] == outdeg["src"], "left_anti"),
+        _OWNER,
+    )
     has_dangling = redistribute_dangling and bool(dangling.head(1))
 
     # with dangling mass each iteration reads the current ranks twice
@@ -102,7 +99,7 @@ def pagerank(
     # loop stays one lazy composed plan — zero per-iteration jobs.
     ranks = nodes.withColumn("rank", F.lit(1.0 / n))
     if has_dangling:
-        ranks = ranks.persist(StorageLevel.MEMORY_AND_DISK)
+        ranks = pins.pin(ranks, _OWNER)
     base = (1.0 - damping) / n
     for _ in range(iters):
         d_mass = 0.0
@@ -136,13 +133,11 @@ def pagerank(
         if has_dangling:
             # materialize THEN drop the previous iteration's cache —
             # the new ranks' lineage reads it exactly once here
-            ranks = ranks.persist(StorageLevel.MEMORY_AND_DISK)
+            ranks = pins.pin(ranks, _OWNER)
             ranks.count()
-            prev.unpersist()
-    if has_dangling:
-        # the final rank table stays pinned (callers usually aggregate
-        # it several ways); the next pagerank() call evicts it
-        _LIVE_PR_CACHES.append(ranks)
+            pins.unpin(prev)
+    # with dangling mass the final rank table stays pinned (callers
+    # usually aggregate it several ways); the next pagerank() evicts it
     return ranks
 
 
@@ -249,8 +244,6 @@ def hits(
 
     Returns ``(node, hub, auth)`` with L1-normalized scores.
     """
-    from pyspark.storagelevel import StorageLevel
-
     if persist_iterations is None:
         persist_iterations = iters > _HITS_LAZY_MAX_ITERS
 
@@ -262,11 +255,9 @@ def hits(
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    while _LIVE_PR_CACHES:
-        _LIVE_PR_CACHES.pop().unpersist()
-    e = e.persist(StorageLevel.MEMORY_AND_DISK)
-    nodes = nodes.persist(StorageLevel.MEMORY_AND_DISK)
-    _LIVE_PR_CACHES.extend([e, nodes])
+    pins.release(_OWNER)
+    e = pins.pin(e, _OWNER)
+    nodes = pins.pin(nodes, _OWNER)
 
     hub = nodes.withColumn("hub", F.lit(1.0))
     auth = nodes.withColumn("auth", F.lit(1.0))  # iters=0: uniform
@@ -300,8 +291,7 @@ def hits(
             hub = hub.localCheckpoint(eager=True)
     # single end normalization: the scores are each read twice below
     # (sum + division), so pin them once to keep the plan small
-    scores = hub.join(auth, "node").persist(StorageLevel.MEMORY_AND_DISK)
-    _LIVE_PR_CACHES.append(scores)
+    scores = pins.pin(hub.join(auth, "node"), _OWNER)
     totals = scores.agg(
         F.sum("hub").alias("_zh"), F.sum("auth").alias("_za")
     )

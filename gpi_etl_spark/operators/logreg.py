@@ -39,14 +39,13 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
+from gpi_etl_spark import pins
 from gpi_etl_spark.functions.rounding import fs6
 
-#: single-live-cache eviction (same policy as similarity/_LIVE_KMEANS,
-#: heavyhitters/_LIVE_HH): a new fit evicts the previous fit's pinned
-#: feature frame, so repeated calls in one session cannot accumulate.
-_LIVE_LOGREG_CACHES: list[DataFrame] = []
+#: pin owner: a new fit evicts the previous fit's pinned feature
+#: frame, so repeated calls in one session cannot accumulate.
+_OWNER = "logreg"
 
 #: floor for a feature's standard deviation: a constant column z-scores
 #: to exactly 0 instead of dividing by zero. 1e-12 parses to the same
@@ -118,14 +117,14 @@ def logreg_train(
     """
     d = len(feature_cols)
     n, mus, sds = fit_standardizer(df, feature_cols)
-    feats = df.select(
-        F.col(label_col).cast("double").alias("_y"),
-        *_z_cols(feature_cols, mus, sds),
+    pins.release(_OWNER)
+    feats = pins.pin(
+        df.select(
+            F.col(label_col).cast("double").alias("_y"),
+            *_z_cols(feature_cols, mus, sds),
+        ),
+        _OWNER,
     )
-    while _LIVE_LOGREG_CACHES:
-        _LIVE_LOGREG_CACHES.pop().unpersist()
-    feats = feats.persist(StorageLevel.MEMORY_AND_DISK)
-    _LIVE_LOGREG_CACHES.append(feats)
 
     w = [0.0] * (d + 1)
     for _ in range(iters):

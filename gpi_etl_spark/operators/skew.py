@@ -20,7 +20,11 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gpi_etl_spark import pins
+
 SALT = "__salt"
+#: pin owner of join_order_greedy's per-step intermediates
+_JOIN_ORDER = "skew.join_order"
 
 
 def top_keys(df: DataFrame, key: str | Sequence[str], n: int = 16) -> list:
@@ -377,8 +381,6 @@ def join_order_greedy(
     each step exactly one chosen = 1. Reference seat: none (the
     reference has no planner of any kind); textbook System R greedy
     with sketch cardinalities."""
-    from pyspark.storagelevel import StorageLevel
-
     from gpi_etl_spark.functions import xhash
     from gpi_etl_spark.operators.sketches import _bucket_arr
 
@@ -488,13 +490,13 @@ def join_order_greedy(
             F.col("c").alias("_cd"),
         )
         dim_tagged = one if dim_tagged is None else dim_tagged.unionByName(one)
-    dim_tagged = dim_tagged.persist()
+    dim_tagged = pins.pin(dim_tagged, _JOIN_ORDER)
 
     # round-13: pin the projected fact — the step-1 frequency pass and
     # the first chosen join both scan it; unpinned, each paid its own
     # full input scan (the same rationale as the chosen-intermediate
     # pins below, applied to step 0)
-    fact = fact.persist(StorageLevel.MEMORY_AND_DISK)
+    fact = pins.pin(fact, _JOIN_ORDER)
 
     persisted: "list[DataFrame]" = [dim_tagged, fact]
     results: "list[tuple[int, str, int, int]]" = []
@@ -590,17 +592,18 @@ def join_order_greedy(
                 else left[fact_key].cast("string")
                 == dim[dim_key].cast("string")
             )
-            left = (
-                left.join(dim, cond, "inner")
-                .select(*[left[c] for c in left.columns])
-                .persist(StorageLevel.MEMORY_AND_DISK)
+            left = pins.pin(
+                left.join(dim, cond, "inner").select(
+                    *[left[c] for c in left.columns]
+                ),
+                _JOIN_ORDER,
             )
             persisted.append(left)
             remaining = [d for d in remaining if d[0] != choice]
             step += 1
     finally:
         for p in persisted:
-            p.unpersist()
+            pins.unpin(p)
     return spark.createDataFrame(
         results,
         "step int, pair string, est_join_size bigint, chosen int",

@@ -13,7 +13,7 @@ operators, same composition; only physical reuse changes), which
 ``tests/test_curation.py::test_curation_dag_persist_matches_lazy``
 asserts, and ``bench.py`` reports both variants.
 
-Stage pins use plain ``persist`` (MEMORY_AND_DISK), not
+Stage pins use :mod:`gpi_etl_spark.pins` (MEMORY_AND_DISK), not
 ``localCheckpoint``: the DAGs are a fixed 4–5-stage composition, so
 lineage depth is bounded and recompute-on-executor-loss safety is worth
 keeping — unlike the unbounded iterative loops in ``linkgraph`` where
@@ -25,24 +25,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-#: pins from the most recent persist_stages run; evicted on the next
-#: call (same single-live-cache policy as linkgraph/_LIVE_PR_CACHES)
-_LIVE_DAG_CACHES: list[DataFrame] = []
+from gpi_etl_spark import pins
+
+#: pin owner: the most recent persist_stages run's stage pins, evicted
+#: on the next such call
+_OWNER = "curation_dags"
 
 
 def _pin(df: DataFrame, persist_stages: bool) -> DataFrame:
-    if not persist_stages:
-        return df
-    from pyspark.storagelevel import StorageLevel
-
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _LIVE_DAG_CACHES.append(df)
-    return df
-
-
-def _evict() -> None:
-    while _LIVE_DAG_CACHES:
-        _LIVE_DAG_CACHES.pop().unpersist()
+    return pins.pin(df, _OWNER) if persist_stages else df
 
 
 def curation_dag_v1(
@@ -60,7 +51,7 @@ def curation_dag_v1(
     from gpi_etl_spark.queries import t
 
     if persist_stages:
-        _evict()
+        pins.release(_OWNER)
     docs = t(spark, sf_dir, "documents")
     toks = textstats.tokens("text")
     sw = F.array(*[F.lit(w) for w in textstats.STOPWORDS["en"]])
@@ -112,7 +103,7 @@ def curation_dag_v2(
     from gpi_etl_spark.queries import t
 
     if persist_stages:
-        _evict()
+        pins.release(_OWNER)
     docs = t(spark, sf_dir, "documents")
     heldout = docs.filter(F.col("doc_id") % 17 == 3)
     corpus = docs.filter(F.col("doc_id") % 17 != 3)

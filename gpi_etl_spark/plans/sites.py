@@ -144,11 +144,6 @@ def full_rules(compat: bool = False) -> list[Rule]:
 DEFAULT_RULES = full_rules()
 
 
-def default_rules(compat: bool = False) -> list[Rule]:
-    """Back-compat alias for :func:`full_rules`."""
-    return full_rules(compat=compat)
-
-
 def classify_pois(pois: DataFrame, rules: Sequence[Rule] = DEFAULT_RULES) -> DataFrame:
     """Accent-fold + punctuation-strip both match fields (:163-171),
     then the ordered rule chain (F-STR9)."""

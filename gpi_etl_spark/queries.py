@@ -29,6 +29,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gpi_etl_spark import pins
 from gpi_etl_spark.functions.cleaning import clean_numeric_sentinels, horizontal_sum, safe_div
 from gpi_etl_spark.functions.dates import (
     month_name_expr,
@@ -64,10 +65,16 @@ REGISTRY: dict[str, tuple[QueryFn, str | None]] = {}
 
 
 def query(name: str, oracle: str | None = None):
+    """Register ``fn`` under ``name``. Every registry entry first
+    releases every pin (:func:`pins.release`), so no pin — and no
+    cached base-table derivative — survives from one query invocation
+    to the next: each bench/oracle run computes from the parquet
+    inputs and re-fills its own caches inside the timed region."""
+
     def deco(fn: QueryFn) -> QueryFn:
         @functools.wraps(fn)
         def dispatched(spark: SparkSession, sf_dir: str) -> DataFrame:
-            _evict_operator_caches()
+            pins.release()
             return fn(spark, sf_dir)
 
         REGISTRY[name] = (dispatched, oracle)
@@ -76,72 +83,9 @@ def query(name: str, oracle: str | None = None):
     return deco
 
 
-def _evict_operator_caches() -> None:
-    """Release operator-level persists on every registry-query entry so
-    no pin — and no cached base-table derivative — survives from one
-    query invocation to the next: each bench/oracle run computes from
-    the parquet inputs and re-fills its own caches inside the timed
-    region. (The within-query reuse in similarity._kmeans_base is safe
-    exactly because of this hook.)
-
-    Round-13 (VERDICT r12 "what's wrong" #3): drain EVERY live-cache
-    registry, not just the kmeans one — a MEMORY_AND_DISK pin left by
-    query A otherwise stays resident while unrelated queries B…Z run
-    in the same process (the bench does exactly this), squeezing
-    execution memory for whichever query follows a heavy pinner
-    (guide §5 cache hygiene). Each operator still evicts its own
-    stale pins at its own entry; this hook is the cross-query
-    backstop."""
-    from gpi_etl_spark.operators import (
-        dedup as _dd,
-        heavyhitters as _hh,
-        hierarchy as _hr,
-        linkgraph as _lg,
-        logreg as _lr,
-        similarity as _sim,
-    )
-    from gpi_etl_spark.plans import curation_dags as _cd
-
-    registries = (
-        _LIVE_QUERY_CACHES,
-        _sim._LIVE_KMEANS_CACHES,
-        _dd._LIVE_SHINGLE_CACHES,
-        _dd._LIVE_SIG_CACHES,
-        _hh._LIVE_HH_CACHES,
-        _hr._LIVE_HIER_CACHES,
-        _lg._LIVE_PR_CACHES,
-        _lr._LIVE_LOGREG_CACHES,
-        _cd._LIVE_DAG_CACHES,
-    )
-    for reg in registries:
-        while reg:
-            reg.pop().unpersist()
-
-
-#: intra-query persist registry (round-12 optimization): queries whose
-#: plan consumes one expensive subtree from SEVERAL places pin it here
-#: for the run — the _LIVE_KMEANS_CACHES policy lifted to the query
-#: layer. The NEXT _evict_query_caches() call (i.e. the next such
-#: query, including the same query's next invocation) releases the
-#: pins, so nothing survives across bench/oracle invocations: every
-#: run still computes from the parquet inputs and re-fills its own
-#: cache inside the timed region.
-_LIVE_QUERY_CACHES: list[DataFrame] = []
-
-
-def _evict_query_caches() -> None:
-    while _LIVE_QUERY_CACHES:
-        _LIVE_QUERY_CACHES.pop().unpersist()
-
-
-def _qcache(df: DataFrame) -> DataFrame:
-    """Persist an intra-query reused frame MEMORY_AND_DISK and pin it
-    until the next :func:`_evict_query_caches`."""
-    from pyspark.storagelevel import StorageLevel
-
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _LIVE_QUERY_CACHES.append(df)
-    return df
+#: pin owner of the intra-query pins: queries whose plan consumes one
+#: expensive subtree from SEVERAL places pin it for the run
+_OWNER = "queries"
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -9353,11 +9297,11 @@ def q188(spark, sf_dir):
     # probes' exact counts read from it instead of re-tokenizing the
     # corpus. Pinned: the sketch and truth subtrees of the one
     # returned plan would otherwise each re-run the explode.
-    _evict_query_caches()
-    freq = _qcache(
+    freq = pins.pin(
         docs.select(F.explode(textstats.tokens("text")).alias("term"))
         .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("n"))
+        .agg(F.count(F.lit(1)).alias("n")),
+        _OWNER,
     )
     sketch = cms_build_weighted(
         freq, "term", "n",
@@ -9852,16 +9796,16 @@ def q200(spark, sf_dir):
     # Round-13 (guide §1.2 don't recompute / §5): the text-feature
     # frame — tokenization + gopher flags + join, the query's dominant
     # per-row cost — is consumed FOUR times (standardizer aggregate,
-    # GD persist fill, isotonic binning, final selection); one _qcache
+    # GD persist fill, isotonic binning, final selection); one query
     # pin pays the corpus text pass once and every consumer reads the
     # narrow numeric cache. Values unchanged: a persist materializes
     # the same rows with the same partitioning, so every downstream
     # partial-sum order is identical.
-    _evict_query_caches()
-    frame = _qcache(
+    frame = pins.pin(
         feats.join(flags, "doc_id").withColumn(
             "y", F.col("pass_gopher").cast("double")
-        )
+        ),
+        _OWNER,
     )
     model = logreg.logreg_train(
         frame, _LOGREG_FEATURES, "y", iters=8, lr=2.0
@@ -10330,14 +10274,14 @@ def q193(spark, sf_dir):
     feats = docs.select(
         "doc_id", textstats.cheap_quality_features("text").alias("q")
     ).select("doc_id", "q.*")
-    # Round-13: same _qcache rationale as q200 — the frame feeds the
+    # Round-13: same pin rationale as q200 — the frame feeds the
     # standardizer pass, the GD persist fill, and the scored
     # confusion aggregate (three corpus text passes collapse to one).
-    _evict_query_caches()
-    frame = _qcache(
+    frame = pins.pin(
         feats.join(flags, "doc_id").withColumn(
             "y", F.col("pass_gopher").cast("double")
-        )
+        ),
+        _OWNER,
     )
     model = logreg.logreg_train(
         frame, _LOGREG_FEATURES, "y", iters=8, lr=2.0
@@ -11098,17 +11042,17 @@ def q209(spark, sf_dir):
     # Round-13 (the q200/q193 rationale): the tokenized frame — the
     # query's dominant per-row cost — is re-derived from parquet by
     # every training action (vocab distinct count, doc count, stats
-    # collect) AND the final scoring plan; one _qcache pin pays the
+    # collect) AND the final scoring plan; one query pin pays the
     # corpus tokenization once (warm 2.31 s → 1.53 s at sf0.1).
     # Values unchanged: a persist materializes the same rows.
-    _evict_query_caches()
-    d = _qcache(
+    d = pins.pin(
         docs.select(
             "doc_id",
             "lang",
             textstats.tokens("text").alias("toks"),
             F.pmod(curation.mix_hash("doc_id"), F.lit(5)).alias("fold"),
-        )
+        ),
+        _OWNER,
     )
     train = d.filter(F.col("fold") != 0)
     test = d.filter(F.col("fold") == 0)
@@ -11972,13 +11916,13 @@ def q221(spark, sf_dir):
     # the distinct stream feeds BOTH the register build and the exact
     # baseline — pin it for the run (round-12, the q238 policy;
     # unpinned, the dedup shuffle executed twice)
-    _evict_query_caches()
-    dist = _qcache(
+    dist = pins.pin(
         t(spark, sf_dir, "events")
         .select(
             "event_type", F.col("user_id").cast("string").alias("uid")
         )
-        .distinct()
+        .distinct(),
+        _OWNER,
     )
     sk = sketches.kmv_build(
         dist, "uid", group_cols=("event_type",), k=128, hash_mode="poly"
@@ -13195,8 +13139,7 @@ def q238(spark, sf_dir):
     # the distinct triple stream feeds BOTH the register build and the
     # exact baseline — pin it for the run (round-12 optimization;
     # unpinned, the full dedup shuffle executed twice)
-    _evict_query_caches()
-    dist = _qcache(ev.distinct())
+    dist = pins.pin(ev.distinct(), _OWNER)
     sk = sketches.kmv_build(
         dist, "uid", group_cols=("event_type", "day"), k=64,
         hash_mode="poly",
@@ -13537,9 +13480,12 @@ def q241(spark, sf_dir):
     # builds (bit-identical counters — CMS linearity, pinned by
     # test); unpinned, each stream paid its scan twice (sketch +
     # truth).
-    _evict_query_caches()
-    fa = _qcache(va.groupBy("uid").agg(F.count(F.lit(1)).alias("na")))
-    fb = _qcache(vb.groupBy("uid").agg(F.count(F.lit(1)).alias("nb")))
+    fa = pins.pin(
+        va.groupBy("uid").agg(F.count(F.lit(1)).alias("na")), _OWNER
+    )
+    fb = pins.pin(
+        vb.groupBy("uid").agg(F.count(F.lit(1)).alias("nb")), _OWNER
+    )
     ka = cms_build_weighted(
         fa, "uid", "na", width=1024, depth=4, hash_mode="poly"
     )
@@ -13660,11 +13606,11 @@ def q242(spark, sf_dir):
     # task (the r9 measurement: 4.1 s vs 2.0 warm at sf0.1). Keyed,
     # so no pre-sort is paid; N is the session's parallelism, not a
     # local-mode constant.
-    _evict_query_caches()
-    d = _qcache(
+    d = pins.pin(
         o.distinct().repartition(
             spark.sparkContext.defaultParallelism, *gcols, "cust"
-        )
+        ),
+        _OWNER,
     )
     sk = sketches.kmv_build(
         d, "cust", group_cols=gcols, k=64, hash_mode="poly",
@@ -14681,11 +14627,11 @@ def q252(spark, sf_dir):
     # poly fold and ×k sign explode paid per DISTINCT key. Pinned:
     # the sketch and exact subtrees of the one returned plan would
     # otherwise each re-run the groupBy.
-    _evict_query_caches()
-    freq = _qcache(
+    freq = pins.pin(
         ev.groupBy("event_type", "uid").agg(
             F.count(F.lit(1)).alias("f")
-        )
+        ),
+        _OWNER,
     )
     sk = sketches.ams_build_weighted(
         freq, "uid", "f", group_cols=("event_type",), k=64,
@@ -15563,8 +15509,7 @@ def q261(spark, sf_dir):
     # counters (CMS linearity, pinned by test). Unpinned, every
     # sketch's corpus subtree re-ran once PER CANDIDATE PAIR it
     # prices — six events passes for three streams.
-    _evict_query_caches()
-    freq = _qcache(
+    freq = pins.pin(
         ev.filter(
             F.col("user_id").isNotNull()
             & F.col("event_type").isin("view", "click", "purchase")
@@ -15572,7 +15517,8 @@ def q261(spark, sf_dir):
         .groupBy(
             "event_type", F.col("user_id").cast("string").alias("uid")
         )
-        .agg(F.count(F.lit(1)).alias("_w"))
+        .agg(F.count(F.lit(1)).alias("_w")),
+        _OWNER,
     )
 
     def sk(et):
@@ -17150,13 +17096,13 @@ def q278(spark, sf_dir):
     # optimization; unpinned, lineitem was scanned four times), then
     # release before returning: the writes below are EAGER, and the
     # returned report reads the written files, not li
-    _evict_query_caches()
-    li = _qcache(
+    li = pins.pin(
         t(spark, sf_dir, "lineitem").select(
             F.floor(F.col("l_extendedprice") * 100.0 + F.lit(0.5))
             .cast("bigint")
             .alias("cents")
-        )
+        ),
+        _OWNER,
     )
     landing = _landing(spark, "q278", sf_dir)
     paths = {
@@ -17174,7 +17120,7 @@ def q278(spark, sf_dir):
         ]
         for f in futs:
             f.result()
-    _evict_query_caches()
+    pins.unpin(li)
     zones = measure_zone_map(spark, paths["range"], "range").unionByName(
         measure_zone_map(spark, paths["hash"], "hash")
     )
@@ -17286,8 +17232,7 @@ def q279(spark, sf_dir):
 
     # pin the projected dimensions for the four write-side jobs, the
     # q278 rationale; released after the eager writes
-    _evict_query_caches()
-    li = _qcache(
+    li = pins.pin(
         t(spark, sf_dir, "lineitem").select(
             F.col("l_partkey").bitwiseAND(F.lit(1023))
             .cast("bigint")
@@ -17295,7 +17240,8 @@ def q279(spark, sf_dir):
             F.col("l_suppkey").bitwiseAND(F.lit(1023))
             .cast("bigint")
             .alias("y"),
-        )
+        ),
+        _OWNER,
     )
     zc = li.select(
         zorder_key("x", "y", bits=10).alias("zk"), "x", "y"
@@ -17320,7 +17266,7 @@ def q279(spark, sf_dir):
         )
         fz.result()
         fx.result()
-    _evict_query_caches()
+    pins.unpin(li)
     zones = measure_zone_map_cols(
         spark, pz, "zorder", ("x", "y")
     ).unionByName(measure_zone_map_cols(spark, px, "range_x", ("x", "y")))
@@ -17665,8 +17611,7 @@ def q282(spark, sf_dir):
     # to hashing every row (CMS linearity, pinned by test). The fact
     # pin keeps the salted join from re-reading parquet; unpinned,
     # detection alone re-ran the scan + poly fold over every row.
-    _evict_query_caches()
-    li = _qcache(
+    li = pins.pin(
         t(spark, sf_dir, "lineitem").select(
             F.when(F.col("l_linenumber") == 1, F.lit(0))
             .otherwise(F.col("l_orderkey") % 1000)
@@ -17675,10 +17620,12 @@ def q282(spark, sf_dir):
             F.floor(F.col("l_quantity") + F.lit(0.5))
             .cast("bigint")
             .alias("qty"),
-        )
+        ),
+        _OWNER,
     )
-    freq = _qcache(
-        li.groupBy("k").agg(F.count(F.lit(1)).cast("bigint").alias("_w"))
+    freq = pins.pin(
+        li.groupBy("k").agg(F.count(F.lit(1)).cast("bigint").alias("_w")),
+        _OWNER,
     )
     sk = cms_build_weighted(
         freq.select(F.col("k").cast("string").alias("item"), "_w"),

@@ -140,28 +140,12 @@ def excel_cells(
     Both container formats parse natively, stdlib only: ``PK`` magic →
     SpreadsheetML zip via ``sources.xlsx``; the OLE2 magic → legacy
     BIFF8 via ``sources.xls`` (the reference's actual WASDE payload
-    format, which it read with xlrd). openpyxl is preferred for .xlsx
-    when installed (style-aware date coercion for exotic formats).
+    format, which it read with xlrd).
     """
-    if payload[:8] == b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1":  # OLE2 → BIFF8
-        from gpi_etl_spark.sources.xls import parse_xls_cells
+    from gpi_etl_spark.sources.xls import is_xls, parse_xls_cells
 
+    if is_xls(payload):
         return parse_xls_cells(payload, sheet_name)
-    try:
-        import openpyxl  # noqa: F401
-    except ImportError:
-        openpyxl = None
-    if openpyxl is not None:
-        wb = openpyxl.load_workbook(io.BytesIO(payload), data_only=True)
-        ws = wb[sheet_name]
-        grid = [[c.value for c in row] for row in ws.iter_rows()]
-        # expand merged ranges so every covered cell holds the anchor value
-        for rng in ws.merged_cells.ranges:
-            anchor = grid[rng.min_row - 1][rng.min_col - 1]
-            for r in range(rng.min_row - 1, rng.max_row):
-                for c in range(rng.min_col - 1, rng.max_col):
-                    grid[r][c] = anchor
-        return grid
     if payload[:2] == b"PK":  # zip container → SpreadsheetML
         from gpi_etl_spark.sources.xlsx import parse_xlsx_cells
 

@@ -26,7 +26,7 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
-_OLE2 = b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1"
+from gpi_etl_spark.sources.xls import is_xls
 
 
 def _workbook_cells(
@@ -36,7 +36,7 @@ def _workbook_cells(
     fill_merged: bool,
 ) -> Iterator[tuple[str, int, int, str]]:
     """One payload → (sheet, row_idx, col_idx, value) tuples."""
-    if payload[:8] == _OLE2:
+    if is_xls(payload):
         from gpi_etl_spark.sources.xls import _Workbook
 
         wb = _Workbook(payload)

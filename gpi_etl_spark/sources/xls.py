@@ -72,6 +72,12 @@ _DATE_CHARS = re.compile(r"[ymdhsYMDHS]")
 _QUOTED = re.compile(r'"[^"]*"|\[[^\]]*\]|\\.')
 
 
+def is_xls(payload: bytes) -> bool:
+    """True when ``payload`` opens with the OLE2/CFB signature: a legacy
+    ``.xls`` workbook rather than a zip ``.xlsx``."""
+    return payload[:8] == _CFB_SIG
+
+
 def _u16(b: bytes, off: int) -> int:
     return struct.unpack_from("<H", b, off)[0]
 
@@ -86,7 +92,7 @@ def _u32(b: bytes, off: int) -> int:
 
 def _cfb_workbook_stream(payload: bytes) -> bytes:
     """Extract the ``Workbook``/``Book`` stream from an OLE2 container."""
-    if payload[:8] != _CFB_SIG:
+    if not is_xls(payload):
         raise ValueError("not an OLE2/CFB file (bad signature)")
     ssz = 1 << _u16(payload, 30)
     msz = 1 << _u16(payload, 32)

@@ -1,10 +1,13 @@
 """Cross-query cache hygiene (round-13, VERDICT r12 "what's wrong" #3):
-the registry dispatcher must drain EVERY live-cache registry at query
-entry, so a MEMORY_AND_DISK pin left by one query cannot stay resident
-while unrelated queries run in the same process (the bench does exactly
-this — guide §5 cache hygiene)."""
+the registry dispatcher must release EVERY pin at query entry, so a
+MEMORY_AND_DISK pin left by one query cannot stay resident while
+unrelated queries run in the same process (the bench does exactly
+this — guide §5 cache hygiene). All pins go through one registry,
+:mod:`gpi_etl_spark.pins`."""
 
 from __future__ import annotations
+
+from gpi_etl_spark import pins
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -25,20 +28,24 @@ def _force_unpersist_all(spark) -> None:
         it.next().unpersist(True)
 
 
-def test_dispatcher_evicts_all_live_caches_between_queries(spark):
-    """Run pin-heavy registry queries back-to-back; at each next
-    query's ENTRY the previous query's pins must already be gone.
-    q282 fills _LIVE_QUERY_CACHES, q212 fills _LIVE_KMEANS_CACHES,
-    q105 fills _LIVE_DAG_CACHES, q200 fills _LIVE_LOGREG_CACHES —
-    four different registries, one shared eviction hook."""
-    from gpi_etl_spark.queries import REGISTRY, _evict_operator_caches
-
-    # start clean (other tests in the session may have left pins —
-    # including localCheckpoint RDDs that clearCache cannot remove)
-    _evict_operator_caches()
+def _start_clean(spark) -> None:
+    # other tests in the session may have left pins — including
+    # localCheckpoint RDDs that clearCache cannot remove
+    pins.release()
     spark.catalog.clearCache()
     _force_unpersist_all(spark)
     assert _n_persistent_rdds(spark) == 0
+
+
+def test_dispatcher_evicts_all_live_caches_between_queries(spark):
+    """Run pin-heavy registry queries back-to-back; at each next
+    query's ENTRY the previous query's pins must already be gone.
+    q282 pins under "queries", q212 under "similarity.kmeans", q105
+    under "curation_dags", q200 under "queries" and "logreg" — four
+    owners, one release on dispatch."""
+    from gpi_etl_spark.queries import REGISTRY
+
+    _start_clean(spark)
 
     for name in (
         "q282_adaptive_skew_join",
@@ -50,40 +57,63 @@ def test_dispatcher_evicts_all_live_caches_between_queries(spark):
         df.write.format("noop").mode("overwrite").save()
         # the NEXT dispatch is where eviction happens; emulate the
         # bench's next-query entry and assert nothing survives it
-        _evict_operator_caches()
+        pins.release()
         assert _n_persistent_rdds(spark) == 0, (
             f"{name} left persistent RDDs after dispatcher eviction"
         )
 
 
-def test_every_live_cache_registry_is_drained_by_the_hook():
-    """Structural guard: any NEW `_LIVE_*_CACHES` registry added to an
-    operator module must be wired into _evict_operator_caches — this
-    walks the package source for registry definitions and asserts the
-    hook names each one."""
-    import inspect
+def test_pin_reuses_equal_plan_and_release_is_per_owner(spark):
+    """Pinning a semantically equal plan twice under one owner hands
+    back the live frame (one persistent RDD, not two); releasing one
+    owner leaves every other owner's pins in place."""
+    _start_clean(spark)
+
+    a = pins.pin(spark.range(100).selectExpr("id * 2 AS x"), "test.a")
+    again = pins.pin(spark.range(100).selectExpr("id * 2 AS x"), "test.a")
+    assert again is a
+    a.count()
+    again.count()
+    assert _n_persistent_rdds(spark) == 1
+
+    b = pins.pin(spark.range(100).selectExpr("id * 3 AS x"), "test.b")
+    assert b is not a
+    b.count()
+    assert _n_persistent_rdds(spark) == 2
+
+    pins.release("test.a")
+    assert not a.is_cached and b.is_cached
+    assert _n_persistent_rdds(spark) == 1
+    pins.release("test.b")
+    assert _n_persistent_rdds(spark) == 0
+
+
+def test_only_the_pins_module_pins_frames():
+    """Structural guard: no pin can escape :func:`pins.release`, because
+    no module of the package except ``pins.py`` calls ``.persist(``,
+    ``.cache()`` or ``.unpersist(`` or names ``StorageLevel``
+    (``localCheckpoint`` is RDD-level and out of scope)."""
     import os
     import re
 
     import gpi_etl_spark
-    from gpi_etl_spark import queries
 
     pkg_dir = os.path.dirname(gpi_etl_spark.__file__)
-    defined: set[str] = set()
+    pin_call = re.compile(
+        r"\.persist\(|\.cache\(\)|\.unpersist\(|StorageLevel"
+    )
+    offenders = []
     for root, _dirs, files in os.walk(pkg_dir):
         for fn in files:
-            if not fn.endswith(".py"):
+            path = os.path.join(root, fn)
+            if not fn.endswith(".py") or path == pins.__file__:
                 continue
-            with open(os.path.join(root, fn)) as fh:
-                src = fh.read()
-            defined |= set(
-                re.findall(r"^(_LIVE_[A-Z0-9_]*CACHES)\s*[:=]", src, re.M)
-            )
-    hook_src = inspect.getsource(queries._evict_operator_caches)
-    missing = {
-        name for name in defined if name not in hook_src
-    }
-    assert not missing, (
-        f"live-cache registries not drained by _evict_operator_caches: "
-        f"{sorted(missing)}"
+            with open(path) as fh:
+                offenders += [
+                    f"{os.path.relpath(path, pkg_dir)}:{i}"
+                    for i, line in enumerate(fh, 1)
+                    if pin_call.search(line)
+                ]
+    assert not offenders, (
+        f"pins taken outside gpi_etl_spark/pins.py: {offenders}"
     )

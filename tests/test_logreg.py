@@ -136,9 +136,10 @@ def test_empty_frame_raises(spark):
 
 
 def test_single_live_cache(spark):
+    from gpi_etl_spark import pins
     from gpi_etl_spark.operators import logreg
 
     df, _ = _toy_frame(spark, n=50)
     logreg.logreg_train(df, ["x1", "x2"], "y", iters=2, lr=1.0)
     logreg.logreg_train(df, ["x1", "x2"], "y", iters=2, lr=1.0)
-    assert len(logreg._LIVE_LOGREG_CACHES) == 1
+    assert len(pins._PINS[logreg._OWNER]) == 1
